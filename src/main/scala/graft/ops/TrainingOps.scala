@@ -166,16 +166,11 @@ object TrainingOps {
   /** BPE training: one distributed corpus pass -> O(vocab) word counts on
     * the driver (min-count floored, size-bounded) -> greedy merge loop
     * (count desc, pair asc argmax; left-to-right application, exactly
-    * [[graft.functions.BpeMerge]]'s semantics). Memoized per (session,
-    * dir) so text_bpe_train and text_bpe_apply share one training run.
+    * [[graft.functions.BpeMerge]]'s semantics). Trains on every call:
+    * text_bpe_train and text_bpe_apply each train once per invocation.
     * Returns (rank, left, right, weighted pair count) for the first 8
     * merges.
     */
-  // memo keyed on sessionUUID, not identityHashCode (ADVICE r5: identity
-  // hashes can be reused after a session is GC'd — stale merges for a new
-  // session); cleared by releaseCaches with the data caches
-  private val bpeMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Seq[(Int, String, String, Long)]]
   private def bpeTrain(s: SparkSession, dir: String): Seq[(Int, String, String, Long)] =
     bpeTrainWithFloor(s, dir, BpeMinWordCount)
 
@@ -184,55 +179,54 @@ object TrainingOps {
     * [[BpeMinWordCount]] on the fixtures).
     */
   private[graft] def bpeTrainWithFloor(s: SparkSession, dir: String,
-      minCount: Long): Seq[(Int, String, String, Long)] =
-    bpeMemo.getOrElseUpdate((sessionKey(s), dir + s"#f$minCount"), {
-      val wc = docs(s, dir)
-        .select(explode(tokens(col("text"))).as("word"))
-        .filter(col("word") =!= "")
-        .groupBy(col("word")).agg(count(lit(1)).as("wcnt"))
-        .filter(col("wcnt") >= minCount)
-        .collect().map(r => (r.getString(0), r.getLong(1)))
-      require(wc.length <= BpeMaxCollectedVocab,
-        s"BPE vocabulary after the >= $minCount floor (${wc.length} words) " +
-          s"exceeds the driver bound $BpeMaxCollectedVocab — raise " +
-          "SPARK_GRAFT_BPE_MIN_COUNT or use the distributed escalation")
-      val seqs = scala.collection.mutable.ArrayBuffer.empty[(Array[String], Long)]
-      wc.foreach { case (w, c) => seqs += ((w.split("").filter(_.nonEmpty), c)) }
-      val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
-      var rank = 1
-      var exhausted = false
-      while (rank <= 8 && !exhausted) {
-        val counts = scala.collection.mutable.Map[(String, String), Long]()
-        seqs.foreach { case (a, c) =>
-          var i = 0
-          while (i < a.length - 1) {
-            val k = (a(i), a(i + 1))
-            counts(k) = counts.getOrElse(k, 0L) + c
-            i += 1
-          }
-        }
-        if (counts.isEmpty) exhausted = true
-        else {
-          val ((l, r), c) = counts.minBy { case ((l, r), c) => (-c, s"$l $r") }
-          merges += ((rank, l, r, c))
-          var i = 0
-          while (i < seqs.length) {
-            val (a, cnt) = seqs(i)
-            val buf = scala.collection.mutable.ArrayBuffer[String]()
-            var j = 0
-            while (j < a.length) {
-              if (j < a.length - 1 && a(j) == l && a(j + 1) == r) {
-                buf += (l + r); j += 2
-              } else { buf += a(j); j += 1 }
-            }
-            seqs(i) = (buf.toArray, cnt)
-            i += 1
-          }
-          rank += 1
+      minCount: Long): Seq[(Int, String, String, Long)] = {
+    val wc = docs(s, dir)
+      .select(explode(tokens(col("text"))).as("word"))
+      .filter(col("word") =!= "")
+      .groupBy(col("word")).agg(count(lit(1)).as("wcnt"))
+      .filter(col("wcnt") >= minCount)
+      .collect().map(r => (r.getString(0), r.getLong(1)))
+    require(wc.length <= BpeMaxCollectedVocab,
+      s"BPE vocabulary after the >= $minCount floor (${wc.length} words) " +
+        s"exceeds the driver bound $BpeMaxCollectedVocab — raise " +
+        "SPARK_GRAFT_BPE_MIN_COUNT or use the distributed escalation")
+    val seqs = scala.collection.mutable.ArrayBuffer.empty[(Array[String], Long)]
+    wc.foreach { case (w, c) => seqs += ((w.split("").filter(_.nonEmpty), c)) }
+    val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
+    var rank = 1
+    var exhausted = false
+    while (rank <= 8 && !exhausted) {
+      val counts = scala.collection.mutable.Map[(String, String), Long]()
+      seqs.foreach { case (a, c) =>
+        var i = 0
+        while (i < a.length - 1) {
+          val k = (a(i), a(i + 1))
+          counts(k) = counts.getOrElse(k, 0L) + c
+          i += 1
         }
       }
-      merges.toSeq
-    })
+      if (counts.isEmpty) exhausted = true
+      else {
+        val ((l, r), c) = counts.minBy { case ((l, r), c) => (-c, s"$l $r") }
+        merges += ((rank, l, r, c))
+        var i = 0
+        while (i < seqs.length) {
+          val (a, cnt) = seqs(i)
+          val buf = scala.collection.mutable.ArrayBuffer[String]()
+          var j = 0
+          while (j < a.length) {
+            if (j < a.length - 1 && a(j) == l && a(j + 1) == r) {
+              buf += (l + r); j += 2
+            } else { buf += a(j); j += 1 }
+          }
+          seqs(i) = (buf.toArray, cnt)
+          i += 1
+        }
+        rank += 1
+      }
+    }
+    merges.toSeq
+  }
 
   /** Per-doc distinct-shingle ARRAY frame, persisted once per session: the
     * plan is identical across every dedup query, so Spark's CacheManager
@@ -267,10 +261,6 @@ object TrainingOps {
         .filter(col("df") > ShingleFreqCap).select("s").unpersist()
     }
     capBindsMemo.clear()
-    liveLabelFrames.synchronized {
-      liveLabelFrames.remove((sessionKey(s), dir))
-    }.foreach(_.foreach(_.unpersist()))
-    bpeMemo.keys.filter(_._1 == sessionKey(s)).foreach(bpeMemo.remove)
     simhashSigs(s, dir).unpersist()
     keywordTf(s, dir).unpersist()
     dsh.unpersist()
@@ -670,67 +660,57 @@ object TrainingOps {
     * propagation to FIXPOINT: every vertex ends labeled with the smallest
     * doc_id reachable from it, a partition-independent canonical cluster
     * id. Each iteration is one equi-join + min-aggregate (both
-    * partitioned on the vertex key — no driver-side row data, labels
-    * persisted per round and released after); iterations needed =
-    * O(component diameter). Near-dup components are overwhelmingly
-    * near-cliques (every member pairs with most others), so 2-3 rounds
-    * converge even at 10^9 docs; a worst-case long-chain graph would call
-    * for the large-star/small-star contraction (Kiveris et al., COSS
-    * 2014), which this loop's join shape extends to directly. The
-    * `maxIters` guard turns a pathological non-convergence into a loud
-    * failure instead of an infinite loop.
+    * partitioned on the vertex key — no driver-side row data);
+    * iterations needed = O(component diameter). Near-dup components are
+    * overwhelmingly near-cliques (every member pairs with most others),
+    * so 2-3 rounds converge even at 10^9 docs; a worst-case long-chain
+    * graph would call for the large-star/small-star contraction (Kiveris
+    * et al., COSS 2014), which this loop's join shape extends to
+    * directly. The `maxIters` guard turns a pathological non-convergence
+    * into a loud failure instead of an infinite loop.
+    *
+    * Every round's labels are an eager `localCheckpoint`, so each round
+    * reads a flat `LogicalRDD` leaf instead of the previous round's
+    * cached plan nested inside it. That keeps per-round driver planning
+    * flat, lets adaptive execution size each round's shuffle from its own
+    * bytes (a persist()'d plan is built without it unless a session-wide
+    * optimizer flag is flipped), and leaves the result with no lineage to
+    * replay, so no caller needs to keep it cached. A superseded round is
+    * released as soon as the next is materialized; the returned round is
+    * left to Spark's ContextCleaner, because a released local checkpoint
+    * cannot be recomputed. On failure the edges and the live round are
+    * released before the exception propagates.
     */
-  /** Serializes the loop-scoped conf flip in [[connectedComponents]]. */
-  private val ccFlagLock = new Object
-
   private[graft] def connectedComponents(pairs: DataFrame,
       maxIters: Int = 25): DataFrame = {
     val fwd = pairs.select(col("ia").as("src"), col("ib").as("dst"))
     val edges = fwd.unionAll(fwd.select(col("dst").as("src"), col("src").as("dst")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // round 1 fused into the vertex-set construction: label = min(self,
-    // min direct neighbor) in ONE aggregation, no join — components that
-    // are single pairs or min-centered stars (the overwhelming near-dup
-    // shape) are already converged here, so the loop below only runs its
-    // one confirming round
-    var labels = edges.groupBy(col("src"))
-      .agg(min(col("dst")).as("mn"))
-      .select(col("src").as("v"), least(col("src"), col("mn")).as("l"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // convergence check: min-label propagation is monotone NON-INCREASING
     // per vertex over a fixed vertex set, so the label sum (DECIMAL — a
     // long sum overflows at ~1e9 docs x 1e9 ids) strictly decreases until
-    // fixpoint. One tiny aggregate on the just-persisted frame replaces
-    // the join+count change detector (which re-shuffled both label frames
-    // every round just to ask "did anything move?").
+    // fixpoint. One tiny aggregate on the just-checkpointed frame answers
+    // "did anything move?" without re-shuffling both label frames.
     def labelSum(df: DataFrame): java.math.BigDecimal = {
       val d = df.agg(sum(col("l").cast("decimal(38,0)"))).first.getDecimal(0)
       if (d == null) java.math.BigDecimal.ZERO else d
     }
-    // materialize round 0 (which also builds the upstream pair/shingle
-    // caches at the session's full width) BEFORE narrowing the loop
-    var prevSum = labelSum(labels)
-    // A persist()'d plan is by default built WITHOUT adaptive execution
-    // (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=false),
-    // so every loop round's cached label frame was built through a full
-    // session-width shuffle (32 near-empty state tasks per round at gate
-    // scale) no matter what AQE would have coalesced it to. Enable the
-    // flag for the LOOP ONLY and restore it after — scoping matters: on
-    // during round 0 it lets AQE coalesce the upstream CPU-heavy shingle
-    // self-join from its small byte estimate. Inside the loop AQE sizes
-    // each round's shuffle from its actual bytes — one task at gate
-    // scale, the advisory width at production pair volumes.
-    // Scale-adaptive, not a local tune. The flip is serialized under
-    // ccFlagLock: two overlapping invocations on one session would
-    // otherwise interleave their save/restore and could leave the flag
-    // set session-wide (concurrent driver-side job submission is an
-    // endorsed pattern elsewhere in this repo).
-    val spark = pairs.sparkSession
-    val flag = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    ccFlagLock.synchronized {
-    val prevFlag = spark.conf.getOption(flag)
-    spark.conf.set(flag, "true")
+    // a local checkpoint's blocks belong to the RDD under its LogicalRDD
+    def release(round: DataFrame): Unit =
+      round.queryExecution.logical.asInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
+        .rdd.unpersist(blocking = false)
+    var labels: DataFrame = null
     try {
+      // round 1 fused into the vertex-set construction: label = min(self,
+      // min direct neighbor) in ONE aggregation, no join — components
+      // that are single pairs or min-centered stars (the overwhelming
+      // near-dup shape) are already converged here, so the loop below
+      // only runs its one confirming round
+      labels = edges.groupBy(col("src"))
+        .agg(min(col("dst")).as("mn"))
+        .select(col("src").as("v"), least(col("src"), col("mn")).as("l"))
+        .localCheckpoint()
+      var prevSum = labelSum(labels)
       var changed = true
       var iters = 0
       while (changed) {
@@ -741,61 +721,38 @@ object TrainingOps {
           .select(col("dst").as("v"), col("l"))
         val next = viaEdge.unionAll(labels)
           .groupBy("v").agg(min("l").as("l"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val nextSum = labelSum(next)
+          .localCheckpoint()
+        release(labels)
+        labels = next
+        val nextSum = labelSum(labels)
         changed = nextSum.compareTo(prevSum) != 0
         prevSum = nextSum
-        labels.unpersist()
-        labels = next
       }
-      System.err.println(s"[cc] fixpoint after $iters rounds")
-    } finally prevFlag match {
-      case Some(v) => spark.conf.set(flag, v)
-      case None => spark.conf.unset(flag)
-    }
-    }
-    edges.unpersist()
-    labels
+      log.info(s"connectedComponents: fixpoint after $iters rounds")
+      labels
+    } catch {
+      case e: Throwable =>
+        if (labels != null) release(labels)
+        throw e
+    } finally edges.unpersist()
   }
+
+  private val log = org.apache.logging.log4j.LogManager.getLogger(getClass)
 
   /** Duplicate clusters + canonical keep decision from the verified
     * n-gram Jaccard pairs: pair lists alone don't tell a curation
     * pipeline what to DELETE — transitive near-dup groups must collapse
     * to one kept document. keep = (doc == smallest doc_id in its
     * component); only docs that appear in some dup pair are emitted.
+    * Each invocation recomputes the fixpoint from the pair frame; its
+    * labels are a local checkpoint with no lineage to replay, so an
+    * earlier result stays readable after any number of later calls.
     */
-  /** The fixpoint loop runs EAGERLY at plan-build time (per-round sum
-    * jobs), so its final persisted labels frame outlives the call — each
-    * invocation is tracked here SOLELY so releaseCaches can unpersist it
-    * (storage bookkeeping, not a memo: every invocation recomputes the
-    * fixpoint from the pair frame). Keyed per (session, dir) like the
-    * other session caches, updated under the map's lock (a lost race
-    * would leak a persisted frame forever), and BOUNDED: beyond the
-    * newest [[MaxLiveLabelFrames]] per key the oldest frames are
-    * unpersisted eagerly — consumers of an already-returned result just
-    * recompute through the (still cached) pair frame, so correctness is
-    * unaffected and a release-less long-lived session cannot accumulate
-    * storage.
-    */
-  private val MaxLiveLabelFrames = 4
-  private val liveLabelFrames = scala.collection.mutable.Map
-    .empty[(String, String), List[DataFrame]]
-  def dedupClusters(s: SparkSession, dir: String): DataFrame = {
-    val labels = connectedComponents(
-      dedupNgram(s, dir, ShingleFreqCap).select(col("ia"), col("ib")))
-    val k = (sessionKey(s), dir)
-    val evicted = liveLabelFrames.synchronized {
-      val all = labels :: liveLabelFrames.getOrElse(k, Nil)
-      val (keep, old) = all.splitAt(MaxLiveLabelFrames)
-      liveLabelFrames.put(k, keep)
-      old
-    }
-    evicted.foreach(_.unpersist())
-    labels
+  def dedupClusters(s: SparkSession, dir: String): DataFrame =
+    connectedComponents(dedupNgram(s, dir, ShingleFreqCap).select(col("ia"), col("ib")))
       .select(col("v").as("doc_id"), col("l").as("cluster"),
         (col("v") === col("l")).as("keep"))
       .orderBy("doc_id")
-  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- text analysis ----

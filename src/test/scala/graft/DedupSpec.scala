@@ -96,17 +96,66 @@ class DedupSpec extends SparkSpec {
     }
   }
 
-  test("dedup_clusters: repeated invocations stay correct past the live-frame bound") {
-    // each invocation recomputes the fixpoint and registers its persisted
-    // labels frame; beyond the bookkeeping bound the oldest frames are
-    // evicted eagerly — results must be identical throughout (an evicted
-    // frame's consumers recompute through the cached pair frame)
-    def run() = graft.ops.TrainingOps.queries("dedup_clusters")(spark, sf("0.001"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
-    val first = run()
-    (1 to 4).foreach(_ =>
-      graft.ops.TrainingOps.queries("dedup_clusters")(spark, sf("0.001")).count())
-    assert(run() === first)
+  test("connected components: a maxIters failure releases every frame it persisted") {
+    import spark.implicits._
+    // the 1-2-3-4 chain needs two loop rounds, so maxIters = 1 trips the
+    // guard with the edges and a checkpointed round live. Checked as "no
+    // new persisted RDD" rather than equality: the ContextCleaner may drop
+    // an earlier test's unreachable frame while this call runs.
+    val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("ia", "ib")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[IllegalArgumentException] {
+      graft.ops.TrainingOps.connectedComponents(chain, maxIters = 1)
+    }
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
+  }
+
+  test("dedup_clusters: no job sees a changed session conf") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // every job carries the session's spark.* confs in its properties, so
+    // a session-wide flip during label propagation would show up here
+    val flag = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    val marker = "graft.test.confMarker"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val markerSeen = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties) match {
+          case Some(p) if p.getProperty(marker) != null => markerSeen.set(true)
+          case p => seen.add(String.valueOf(p.map(_.getProperty(flag)).orNull))
+        }
+    }
+    val sc = spark.sparkContext
+    val confBefore = spark.conf.getAll
+    sc.addSparkListener(listener)
+    try {
+      graft.ops.TrainingOps.queries("dedup_clusters")(spark, sf("0.001")).collect()
+      // the listener bus delivers in order: once the marker job's start
+      // arrives, every earlier job's start has arrived too
+      sc.setLocalProperty(marker, "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(marker, null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!markerSeen.get && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(markerSeen.get, "listener bus did not deliver the marker job")
+    } finally sc.removeSparkListener(listener)
+    assert(!seen.isEmpty)
+    assert(!seen.contains("true"))
+    assert(spark.conf.getAll === confBefore)
+  }
+
+  test("dedup_clusters: repeated invocations return identical results") {
+    // each invocation recomputes the fixpoint into its own local
+    // checkpoint; nothing tracks or releases earlier results, so they stay
+    // readable and identical to later ones
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
+    def call() = graft.ops.TrainingOps.queries("dedup_clusters")(spark, sf("0.001"))
+    val firstDf = call()
+    val first = rows(firstDf)
+    (1 to 4).foreach(_ => call().count())
+    assert(rows(call()) === first)
+    assert(rows(firstDf) === first)
   }
 
   test("dedup_clusters covers exactly the paired docs, one keeper per cluster") {
