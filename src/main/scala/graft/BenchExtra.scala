@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round diagnostic (guide §1): the query-suite part of
-  * [[Bench]] under the SAME session shape (local[$SPARK_GRAFT_CPUS],
-  * shuffle.partitions = cpus, AQE on, 4 MB input bins), WITHOUT the
+  * [[Bench]] under the SAME session shape (local[$SPARK_GRAFT_CPUS], the
+  * host's cores when unset; shuffle.partitions = cpus, AQE on, 4 MB input
+  * bins), WITHOUT the
   * ~30-minute scaling harness — so per-query before/after numbers are
   * comparable to the driver's BENCH_r*.json without paying a full bench per
   * iteration. Bench.scala itself stays frozen; this main only adds
@@ -14,18 +13,10 @@ import org.apache.spark.sql.SparkSession
 object BenchExtra {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-benchextra-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "0")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(s"graft-benchextra-${Sessions.hostCpus}",
+      extraConf = Map(
+        "spark.sql.files.maxPartitionBytes" -> "4m",
+        "spark.sql.files.openCostInBytes" -> "0"))
     val wanted = args.toSeq
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => wanted.isEmpty || wanted.exists(n.contains))

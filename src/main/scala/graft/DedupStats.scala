@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
@@ -16,11 +16,7 @@ import graft.ops.TrainingOps
 object DedupStats {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local("graft-dedupstats")
     GraftFunctions.ensureRegistered(spark)
 
     val d = spark.read.parquet(s"$dir/documents.parquet")

@@ -2,20 +2,14 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps formatted physical plans for the judge-facing evidence in
   * PLANS.md: parquet filter pushdown + column pruning, broadcast joins,
   * whole-stage codegen spans, and the pipeline's single-shuffle shape.
+  * The session is fixed at 4 cores on every host so plans stay comparable.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local("graft-plandump", cpus = 4)
     val dir = "/root/testdata/sf0.001"
 
     def plan(name: String): String = {

@@ -78,18 +78,9 @@ object Soak {
     val turns = args.lift(0).map(_.toLong).getOrElse(40000000L)
     val nDocs = args.lift(1).map(_.toLong).getOrElse(50000L)
     val nEvents = args.lift(2).map(_.toLong).getOrElse(1000000L)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-soak")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.sql.files.openCostInBytes", "0")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local("graft-soak", extraConf = Map(
+      "spark.sql.files.maxPartitionBytes" -> "16m",
+      "spark.sql.files.openCostInBytes" -> "0"))
 
     val root = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get("/dev/shm"), "graft_soak").toString
@@ -153,7 +144,7 @@ object Soak {
     }
     md ++= f"| pipeline ($turns turns) | — | — | $pipeWall%.1f | ${report.totalRows} | — | $pipeLive |\n"
     md ++= f"\nPipeline throughput at 10x: ${report.turnsPerSec.round} turns/s " +
-      "(compare turns_per_sec_32c in BENCH/last_bench.json).\n"
+      "(compare turns_per_sec_<cpus>c in BENCH/last_bench.json).\n"
     md ++= "\nNote: sf0.1 walls are dominated by fixed per-query overhead, so\n"
     md ++= "sub-10x ratios are expected for linear ops; the falsification\n"
     md ++= "criterion is a ratio FAR ABOVE 10x or a heap that tracks corpus size.\n"

@@ -1,23 +1,16 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Iteration aid: dump ONLY the named queries (plus oracle_sql.json) so
   * `scripts/check.py SFDIR OUTDIR q...` can gate a new operator without
-  * paying for the full Verify sweep. Same session shape as graft.Verify.
+  * paying for the full Verify sweep. Same session shape as graft.Verify,
+  * except that an unset SPARK_GRAFT_CPUS means the host's cores.
   */
 object VerifySome {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1); val names = args.drop(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local("graft-verify-some")
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       graft.SparkEntry.queries(name)(spark, sfDir)

@@ -77,14 +77,28 @@ class DictionarySpec extends SparkSpec {
   test("the parse stage with config formats stays in whole-stage codegen") {
     graft.functions.GraftFunctions.ensureRegistered(spark)
     // non-foldable input (off spark.range) or the whole parse constant-folds
-    // into a LocalTableScan and there is no stage to inspect
-    val df = PatternDictionary.parse(
-      spark.range(4).select(concat(lit("EVT,click,"), col("id"),
-        lit(",2024-06-01 10:00:00")).as("text")),
-      Transcripts.RunTsMillis, Seq(csvSpec))
-    val plan = df.queryExecution.executedPlan.toString
-    // the fused projection must not fall out of WSCG because of the
-    // config-compiled trees (the CodegenFallback hazard class)
-    assert(plan.contains("*("), s"no WholeStageCodegen span in:\n$plan")
+    // into a LocalTableScan and there is no stage to inspect. Two inputs:
+    // config-declared rows parsed with the csv spec, and built-in syslog
+    // rows parsed with no config formats at all.
+    val inputs = Seq(
+      "config csv" -> (concat(lit("EVT,click,"), col("id"),
+        lit(",2024-06-01 10:00:00")), Seq(csvSpec)),
+      "built-in syslog" -> (concat(lit("<13>Jun  5 04:03:02 h"), col("id"),
+        lit(" cron[7]: hello")), Seq.empty[FormatSpec]))
+    inputs.foreach { case (label, (text, formats)) =>
+      val df = PatternDictionary.parse(spark.range(4).select(text.as("text")),
+        Transcripts.RunTsMillis, formats)
+      val plan = df.queryExecution.executedPlan.toString
+      // the fused PROJECTION must be starred: `*(1) Range` alone would
+      // print "*(" even with the parse fallen out of WSCG (the
+      // CodegenFallback hazard class)
+      assert("""\*\(\d+\) Project""".r.findFirstIn(plan).nonEmpty,
+        s"$label: parse projection not in a WholeStageCodegen span:\n$plan")
+      // and so must every staged projection: one CodegenFallback tree
+      // leaves the top Project un-starred while the stages below it still
+      // print "*(1) Project"
+      assert("""(?m)^[\s+\-:]*Project \[""".r.findFirstIn(plan).isEmpty,
+        s"$label: an un-fused Project survives in:\n$plan")
+    }
   }
 }

@@ -10,15 +10,7 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // fixed at 4 cores on every host: plan-shape and partition-count
+  // assertions must not depend on the machine running the suite
+  lazy val session: SparkSession = Sessions.local("graft-test", cpus = 4)
 }
